@@ -105,7 +105,7 @@ def main() -> int:
     sys.path.insert(0, os.getcwd())
     import catalog
     import datagen
-    from common import ENGINE, start_session
+    from common import ENGINE, start_session, stop_jvm
 
     data_dir = os.path.join(os.getcwd(), ".perfbench", "selftest-tables")
     datagen.write_catalog_tables(data_dir, catalog.DATA_SF, catalog.DATA_SEED)
@@ -115,6 +115,7 @@ def main() -> int:
         mismatched, pruned = check(spark, {n: qs[n] for n in catalog.ALL_QUERIES}, data_dir)
     finally:
         spark.stop()
+        stop_jvm()
     print(f"selftest: {len(catalog.ALL_QUERIES) - len(mismatched)}/{len(catalog.ALL_QUERIES)} "
           f"timed plans match explain; count() would prune {len(pruned)}: {', '.join(pruned)}")
     return 1 if mismatched else 0

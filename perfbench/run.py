@@ -119,7 +119,7 @@ def run_stream(spark, args, ctx: dict) -> dict:
 
     tracer = ctx["tracer"]
     work = ctx["work"]
-    model_path = stream.ensure_model(spark, ctx["cache"], ctx["engine_key"])
+    model_path = stream.ensure_model(ctx["cache"], ctx["engine_key"])
     n_files = round((stream.WARMUP_S + args.seconds) / stream.PERIOD_S)
     # The model load and the input write are independent: overlap them.
     with tracer.span("setup.model_and_inputs"):

@@ -62,17 +62,28 @@ def fit_model(spark):
     return model, time.perf_counter() - t0
 
 
-def ensure_model(spark, cache_dir: str, engine_key: str) -> str:
+def ensure_model(cache_dir: str, engine_key: str) -> str:
     """Path of the cached GBT model for this engine source.
 
     The model is fitted once per checkout, like a build step: a scoring
-    service loads a fitted model, it does not train at start-up.  It is
+    service loads a fitted model, it does not train at start-up.  The fit
+    runs in its own process, because a fit warms the JVM and the run that
+    fitted would otherwise read faster than every later run.  The model is
     kept as one Java-serialized object, which loads in well under a
     second; MLlib's directory format costs about 20 Spark jobs (~8 s on a
     fresh session) per load, more than a run's budget allows."""
     path = os.path.join(cache_dir, f"gbt-{engine_key}.ser")
     if not os.path.exists(path):
         os.makedirs(cache_dir, exist_ok=True)
+        subprocess.run([sys.executable, os.path.abspath(__file__), path], check=True, timeout=900)
+    return path
+
+
+def _fit_and_save(path: str) -> None:
+    from common import start_session, stop_jvm
+
+    spark, _ = start_session(len(os.sched_getaffinity(0)))
+    try:
         model, fit_s = fit_model(spark)
         print(f"perfbench: fitted the GBT model in {fit_s:.1f} s (cached)", file=sys.stderr)
         jvm = spark._jvm
@@ -82,10 +93,12 @@ def ensure_model(spark, cache_dir: str, engine_key: str) -> str:
             out.writeObject(model._to_java())
         finally:
             out.close()
-        os.replace(tmp, path)
         with open(path + ".json", "w") as f:
             json.dump({"fit_s": fit_s, "train_rows": TRAIN_ROWS}, f)
-    return path
+        os.replace(tmp, path)
+    finally:
+        spark.stop()
+        stop_jvm()
 
 
 def recorded_fit_s(model_path: str) -> float:
@@ -452,3 +465,10 @@ def single_core_drain(spark, model, backlog: str, tracer: Tracer) -> float:
     with tracer.span("single_core_drain"):
         d = drain(spark, model, src, f"{src}.ckpt", "local1")
     return lines / d["wall_s"]
+
+
+if __name__ == "__main__":
+    # ``python3 perfbench/stream.py MODEL_PATH`` from the repository root:
+    # fit the model and write it to MODEL_PATH (see ensure_model).
+    sys.path.insert(0, os.getcwd())
+    _fit_and_save(sys.argv[1])

@@ -6,6 +6,11 @@ physical plan in full (``selftest.py`` pins that against ``df.explain()``)
 and hands back the rows the analyst's panel would show.  The rows are
 hash-compared against the query's DuckDB oracle on the same parquet
 files, with ``tools/check_oracle.py``'s canonicalization.
+
+The tables are the engine's sf 0.01 test tables (seed 42), kept under
+``perfbench/sf0.01`` so that the benchmark reads the data the catalog was
+written and tested against: 60k lineitem, 15k orders, 10k events of 150
+users, 500 documents and 500 labelled embeddings.
 """
 
 from __future__ import annotations
@@ -26,27 +31,33 @@ import selftest
 from common import ENGINE, ExecMetrics, Tracer, job_counts, quantile
 
 # Members are chosen so that a run (session start, an untimed warm-up
-# pass and the timed pass) fits the run budget on 4 cores while every
+# pass and the timed passes) fits the run budget on 4 cores while every
 # layer keeps a member that stresses it.
 # Evaluation, dashboard and forensics panels of the reference plus TPC-H:
-# scans, joins, windows and aggregates, all in the JVM.
+# scans, joins (broadcast, semi/anti, as-of), windows and aggregates, all
+# in the JVM.
 SQL_QUERIES = [
-    "fraud_patterns", "classification_metrics", "confusion_matrix", "roc_auc",
-    "dashboard_snapshot", "user_rfm_segments", "user_sessions",
-    "asof_last_error_before_purchase", "q3_shipping_priority", "q21_waiting_suppliers",
+    "fraud_patterns", "roc_auc", "dashboard_snapshot", "user_sessions",
+    "asof_last_error_before_purchase", "q21_waiting_suppliers",
 ]
 # The Python boundary (cogrouped pandas LSH, Arrow hash UDF) and
 # driver-side iteration (BPE merge rounds).
 PYITER_QUERIES = ["embedding_lsh_recall_audit", "hll_distinct_users", "bpe_merge_table"]
 WORKLOADS = {"catalog_sql": SQL_QUERIES, "catalog_pyiter": PYITER_QUERIES}
+# One untimed pass compiles (code generation, JIT).  The JVM keeps
+# compiling for a few more passes, each 5-15% faster than the last, so a
+# run times a fixed number of passes (more than fit in the run's seconds
+# on 4 cores) and reports each member's best: every run then ends at the
+# same point of that curve.
+WARM_UP_PASSES = 1
+TIMED_PASSES = {"catalog_sql": 3, "catalog_pyiter": 2}
 ALL_QUERIES = SQL_QUERIES + PYITER_QUERIES
 
-# The catalog tables do not depend on the workload seed, so oracle
-# digests can be cached and the non-oracled member compared against a
-# recorded result.  Query cost at this size is mostly per-query overhead
-# (planning, scheduling, Python workers), which is what the passes stress.
-DATA_SF = 0.01
-DATA_SEED = 42
+# The tables do not depend on the workload seed, so oracle digests can be
+# cached and the non-oracled member compared against a recorded result.
+# Query cost at this size is mostly per-query overhead (planning,
+# scheduling, Python workers), which is what the passes stress.
+DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "sf0.01")
 EXPECTED_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "expected.json")
 
 
@@ -88,18 +99,18 @@ def oracle_digests(data_dir: str, names: list[str]) -> dict[str, str]:
     return out
 
 
-def expected_digests(data_dir: str, names: list[str], cache_dir: str, engine_key: str) -> dict[str, str]:
+def expected_digests(names: list[str], cache_dir: str, engine_key: str) -> dict[str, str]:
     """Oracle digests (cached per engine source hash) plus the recorded
     digest of every member without an oracle."""
     registry = importlib.import_module(f"{ENGINE}.plans.registry")
-    path = os.path.join(cache_dir, f"oracle-{engine_key}-sf{DATA_SF}-s{DATA_SEED}.json")
+    path = os.path.join(cache_dir, f"oracle-{engine_key}-sf0.01.json")
     got: dict[str, str] = {}
     if os.path.exists(path):
         with open(path) as f:
             got = json.load(f)
     missing = [n for n in names if n not in got and registry.QUERIES[n].oracle is not None]
     if missing:
-        got.update(oracle_digests(data_dir, missing))
+        got.update(oracle_digests(DATA_DIR, missing))
         os.makedirs(cache_dir, exist_ok=True)
         with open(path + ".tmp", "w") as f:
             json.dump(got, f)
@@ -115,13 +126,12 @@ def expected_digests(data_dir: str, names: list[str], cache_dir: str, engine_key
 class CatalogRun:
     """Runs passes of one catalog workload in an open session."""
 
-    def __init__(self, spark, names: list[str], data_dir: str, expected: dict[str, str],
-                 seed: int, tracer: Tracer):
+    def __init__(self, spark, names: list[str], expected: dict[str, str], seed: int,
+                 tracer: Tracer):
         plans = importlib.import_module(f"{ENGINE}.plans")
         self.spark = spark
         self.fns = {n: plans.queries()[n] for n in names}
         self.names = names
-        self.data_dir = data_dir
         self.expected = expected
         self.rng = random.Random(seed)
         self.tracer = tracer
@@ -149,7 +159,7 @@ class CatalogRun:
                     try:
                         with self.tracer.span("plans.build"):
                             t0 = time.perf_counter()
-                            df = self.fns[name](self.spark, self.data_dir)
+                            df = self.fns[name](self.spark, DATA_DIR)
                             t1 = time.perf_counter()
                         with self.tracer.span("execute"):
                             rows = df.collect()
@@ -181,7 +191,6 @@ class CatalogRun:
                 "per_query": per_query, "scan_rows": scan_rows,
                 "jobs": jobs, "stages": stages, "tasks": tasks}
 
-
     def _selftest(self, name: str, df) -> None:
         """The timed plan must match explain's; a mismatch is a failure."""
         timed, explained, counted = selftest.compare(df)
@@ -196,12 +205,19 @@ class CatalogRun:
 
 
 def end_to_end(passes: list[dict]) -> dict[str, float]:
-    query_ms = [q["build_ms"] + q["execute_ms"] for p in passes for q in p["per_query"].values()]
+    """Each member's best time over the timed passes: a busy host only
+    ever adds time, so the minimum is the steadiest estimate of the
+    engine's own cost."""
+    names = set.intersection(*(set(p["per_query"]) for p in passes)) or {None}
+    best = {n: min(p["per_query"][n]["build_ms"] + p["per_query"][n]["execute_ms"] for p in passes)
+            if n else 0.0 for n in names}
+    best_exec = sum(min(p["per_query"][n]["execute_ms"] for p in passes) for n in best if n)
     return {
-        "pass_s": statistics.median(p["pass_s"] for p in passes),
-        "latency_p50_ms": quantile(query_ms, 0.5),
-        "latency_p99_ms": quantile(query_ms, 0.99),
-        "rows_per_s": sum(p["scan_rows"] for p in passes) / sum(p["pass_s"] for p in passes),
+        "pass_s": sum(best.values()) / 1000,
+        "latency_p50_ms": quantile(list(best.values()), 0.5),
+        "latency_p99_ms": quantile(list(best.values()), 0.99),
+        # Scan throughput of execution alone; pass_s also holds plan building.
+        "rows_per_s": statistics.median(p["scan_rows"] for p in passes) * 1000 / max(best_exec, 1e-9),
     }
 
 

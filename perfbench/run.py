@@ -20,7 +20,6 @@ import hashlib
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -79,30 +78,23 @@ def engine_key(root: str) -> str:
 
 def run_catalog(spark, args, ctx: dict) -> dict:
     import catalog
-    import datagen
 
     names = catalog.WORKLOADS[args.workload]
-    data_dir = os.path.join(ctx["work"], "tables")
-    gen_s = []
-    with ctx["tracer"].span("setup.tables"):
-        for _ in range(3):
-            t0 = time.perf_counter()
-            datagen.write_catalog_tables(data_dir, catalog.DATA_SF, catalog.DATA_SEED)
-            gen_s.append(time.perf_counter() - t0)
     with ctx["tracer"].span("setup.oracle"):
-        expected = catalog.expected_digests(data_dir, names, ctx["cache"], ctx["engine_key"])
-    run = catalog.CatalogRun(spark, names, data_dir, expected, args.seed, ctx["tracer"])
-    # One untimed pass first: the timed passes see a warm session (code
+        expected = catalog.expected_digests(names, ctx["cache"], ctx["engine_key"])
+    run = catalog.CatalogRun(spark, names, expected, args.seed, ctx["tracer"])
+    # Untimed passes first: the timed passes see a warm session (code
     # generation cache, JIT, Python workers), as a dashboard refresh does.
     with ctx["tracer"].span("setup.warm_up"):
         t0 = time.perf_counter()
-        run.one_pass(traced=False)
+        for _ in range(catalog.WARM_UP_PASSES):
+            run.one_pass(traced=False)
         warm_s = time.perf_counter() - t0
     passes = []
     t_end = time.perf_counter() + args.seconds
-    while not passes or time.perf_counter() < t_end:
+    while len(passes) < catalog.TIMED_PASSES[args.workload] or time.perf_counter() < t_end:
         passes.append(run.one_pass(traced=False))
-    out = {"setup_s": ctx["start_s"] + statistics.median(gen_s) + warm_s,
+    out = {"setup_s": ctx["start_s"] + warm_s,
            "e2e": catalog.end_to_end(passes),
            "passes": [{k: p[k] for k in ("pass_s", "build_s", "order", "per_query")} for p in passes]}
     if args.trace:
@@ -119,31 +111,40 @@ def run_stream(spark, args, ctx: dict) -> dict:
 
     tracer = ctx["tracer"]
     work = ctx["work"]
-    model_path = stream.ensure_model(ctx["cache"], ctx["engine_key"])
     n_files = round((stream.WARMUP_S + args.seconds) / stream.PERIOD_S)
     # The model load and the input write are independent: overlap them.
     with tracer.span("setup.model_and_inputs"):
         t0 = time.perf_counter()
         with ThreadPoolExecutor(1) as pool:
-            loading = pool.submit(stream.load_model, spark, model_path)
-            inputs = stream.write_inputs(spark, os.path.join(work, "inputs"), n_files,
-                                         stream.ROWS_PER_FILE, args.seed)
+            loading = pool.submit(stream.load_model, spark, ctx["model_path"])
+            inputs = stream.write_inputs(spark, work, n_files, args.seed)
             model = loading.result()
-        stream.warm_up(spark, model, work)
+        stream.warm_up(spark, model, work, inputs)
         prep_s = time.perf_counter() - t0
-    out = {"setup_s": ctx["start_s"] + prep_s, "inputs": inputs}
     res = stream.run_steady(spark, model, work, args.seconds, tracer, inputs, ctx["exclude_pids"])
-    out.update(e2e=res["e2e"], attempted=res["attempted"], failed=res["failed"])
+    drained = stream.timed_drain(spark, model, work, inputs, tracer)
+    with tracer.span("verify"):
+        failed = 0
+        for part, src, tags in (("feed", res["source"], ["steady"]),
+                                ("backlog", inputs["backlog"]["dir"],
+                                 [f"drain{i}" for i in range(stream.DRAINS)])):
+            expected = stream.batch_state(spark, src, model)
+            failed += abs(expected[1] - inputs[part]["injected"])
+            for tag in tags:
+                failed += stream.verify(spark, expected, inputs[part], tag)
+    attempted = inputs["feed"]["lines"] + stream.DRAINS * inputs["backlog"]["lines"]
+    out = {"setup_s": ctx["start_s"] + prep_s, "inputs": inputs, "e2e": dict(res["e2e"], **drained),
+           "attempted": attempted, "failed": failed}
     if args.trace:
         layer = res["layer"]
         layer["sources.generator.write_s"] = inputs["write_s"]
-        layer["ml.pipeline.fit_s"] = stream.recorded_fit_s(model_path)
-        backlog, drains = stream.traced_drains(spark, model, work, args.seed, tracer)
-        layer.update(drains)
+        layer["ml.pipeline.fit_s"] = stream.recorded_fit_s(ctx["model_path"])
+        layer.update(stream.traced_drains(spark, model, work, inputs, drained["pass_s"], tracer))
         spark.stop()
         spark1, _ = start_session(1, master="local[1]")
-        model1 = stream.load_model(spark1, model_path)
-        layer["streaming.local1_rows_per_s"] = stream.single_core_drain(spark1, model1, backlog, tracer)
+        model1 = stream.load_model(spark1, ctx["model_path"])
+        layer["streaming.local1_rows_per_s"] = stream.single_core_drain(
+            spark1, model1, inputs["backlog"]["dir"], tracer)
         out["layer"] = layer
     return out
 
@@ -174,6 +175,11 @@ def main(argv: list[str] | None = None) -> int:
     ctx = {"work": work, "cache": os.path.join(base, "cache"), "engine_key": engine_key(root),
            "tracer": tracer, "exclude_pids": set()}
     calibration_ms = calibrate_ms()
+    if args.workload.startswith("stream"):
+        # Fitted at most once per checkout, before any measurement starts.
+        import stream
+
+        ctx["model_path"] = stream.ensure_model(ctx["cache"], ctx["engine_key"])
     spark = None
     try:
         with RssSampler(ctx["exclude_pids"]) as rss:

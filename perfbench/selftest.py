@@ -5,18 +5,12 @@ of the collected DataFrame, read after the action) must have the same
 number of Window, Python-boundary, join and scan nodes as the plan
 ``df.explain()`` prints before the action.  The same counts taken from the
 ``groupBy().count()`` plan show what timing ``count()`` would prune.
-The traced pass of a catalog run applies ``compare`` to every query.
-
-Standalone: ``python3 perfbench/selftest.py`` from the repository root
-generates the catalog tables and checks every member; exit code 1 on any
-mismatch.
+The traced pass of a catalog run applies ``compare`` to every query of its
+workload and counts a mismatch as a failure, so traced ``catalog_sql`` and
+``catalog_pyiter`` runs together check every member.
 """
 
 from __future__ import annotations
-
-import importlib
-import os
-import sys
 
 _STAGES = ("ShuffleQueryStage", "BroadcastQueryStage", "TableCacheQueryStage", "ResultQueryStage")
 _PYTHON = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
@@ -79,47 +73,3 @@ def compare(df) -> tuple[dict, dict, dict]:
     explained = family_counts(_plan(df.alias("selftest")))
     counted = family_counts(_plan(df.alias("selftest").groupBy().count()))
     return timed, explained, counted
-
-
-def check(spark, fns: dict, data_dir: str) -> tuple[list[str], list[str]]:
-    """Returns (members whose timed plan differs from explain's,
-    members whose count() plan drops nodes)."""
-    mismatched, pruned_by_count = [], []
-    for name, fn in fns.items():
-        df = fn(spark, data_dir)
-        before = family_counts(_plan(df))
-        df.collect()
-        timed, explained, counted = compare(df)
-        if not timed == explained == before:
-            mismatched.append(name)
-            print(f"selftest: {name} timed {timed}, explain {before}, fresh plan {explained}",
-                  file=sys.stderr)
-        if counted != explained:
-            pruned_by_count.append(name)
-    return mismatched, pruned_by_count
-
-
-def main() -> int:
-    here = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, here)
-    sys.path.insert(0, os.getcwd())
-    import catalog
-    import datagen
-    from common import ENGINE, start_session, stop_jvm
-
-    data_dir = os.path.join(os.getcwd(), ".perfbench", "selftest-tables")
-    datagen.write_catalog_tables(data_dir, catalog.DATA_SF, catalog.DATA_SEED)
-    spark, _ = start_session(len(os.sched_getaffinity(0)))
-    try:
-        qs = importlib.import_module(f"{ENGINE}.plans").queries()
-        mismatched, pruned = check(spark, {n: qs[n] for n in catalog.ALL_QUERIES}, data_dir)
-    finally:
-        spark.stop()
-        stop_jvm()
-    print(f"selftest: {len(catalog.ALL_QUERIES) - len(mismatched)}/{len(catalog.ALL_QUERIES)} "
-          f"timed plans match explain; count() would prune {len(pruned)}: {', '.join(pruned)}")
-    return 1 if mismatched else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

@@ -432,7 +432,7 @@ def hll_bucket_rank(df: DataFrame, key_sql: str, m: int = HLL_M) -> DataFrame:
     """Adds the HLL register coordinates ``b`` (bucket) and ``rho``
     (geometric rank) for ``key_sql`` — the ONE definition of the
     hash→mixer→rank pipeline, shared by the batch estimator and the
-    streaming dual.  The streaming dual feeds these pre-hashed pairs
+    streaming dual.  The streaming dual aggregates these pre-hashed pairs
     (cf. ``cms_sketch_stream``) so batch/stream register parity is
     STRUCTURAL — both sides evaluate the same JVM expressions — rather
     than dependent on three libm implementations (JVM Math.log, CPython
@@ -452,6 +452,46 @@ def hll_bucket_rank(df: DataFrame, key_sql: str, m: int = HLL_M) -> DataFrame:
         ph.withColumn("b", F.pmod(F.col("g"), F.lit(m)))
         .withColumn("rho", rho.cast("long"))
         .drop("g")
+    )
+
+
+def hll_estimate(regs: DataFrame) -> DataFrame:
+    """HyperLogLog estimate over register cells ``(key..., b, r)``: one
+    row per key with the non-empty register count and the estimate
+    ``e`` (raw harmonic-mean estimator, Flajolet et al. small-range
+    correction ``m·ln(m/V)``).  Every column other than ``b`` and ``r``
+    is a grouping key, so ``(event_type, b, r)`` yields
+    ``(event_type, nonempty, e)``.
+
+    The ONE definition of the estimator: the batch queries call it on
+    their register aggregates and the streaming dual's readers call it
+    on the streamed cells (``hll_distinct_stream``).  Σ 2^-r is a sum of
+    exact dyadic rationals with < 2^53 total mass, so the estimate is
+    bit-exact under any aggregation order.
+    """
+    keys = [c for c in regs.columns if c not in ("b", "r")]
+    agg = regs.groupBy(*keys).agg(
+        F.count("*").alias("nonempty"),
+        # SQL shiftleft (the python wrapper wants a literal bit count):
+        # 2^-r as an exact dyadic, no pow/libm
+        F.sum(F.expr("1.0 / double(shiftleft(cast(1 as bigint), r))"))
+        .alias("s_nonempty"),
+    )
+    zeros = F.lit(HLL_M) - F.col("nonempty")
+    e_raw = (
+        F.expr(f"0.7213 / (1.0 + 1.079 / {float(HLL_M)})")
+        * F.lit(float(HLL_M * HLL_M))
+        / (zeros * F.lit(1.0) + F.col("s_nonempty"))
+    )
+    return agg.select(
+        *keys,
+        "nonempty",
+        F.when(
+            (e_raw <= 2.5 * HLL_M) & (zeros > 0),
+            F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros),
+        )
+        .otherwise(e_raw)
+        .alias("e"),
     )
 
 
@@ -531,28 +571,8 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ph = hll_bucket_rank(
         e.select("event_type", "user_id"), "cast(user_id as string)"
     )
-    regs = ph.groupBy("event_type", "b").agg(F.max("rho").alias("r"))
-    agg = regs.groupBy("event_type").agg(
-        F.count("*").alias("nonempty"),
-        # SQL shiftleft (the python wrapper wants a literal bit count):
-        # 2^-r as an exact dyadic, no pow/libm
-        F.sum(F.expr("1.0 / double(shiftleft(cast(1 as bigint), r))"))
-        .alias("s_nonempty"),
-    )
-    zeros = F.lit(HLL_M) - F.col("nonempty")
-    e_raw = (
-        F.expr("0.7213 / (1.0 + 1.079 / 256.0)")
-        * F.lit(float(HLL_M * HLL_M))
-        / (zeros * F.lit(1.0) + F.col("s_nonempty"))
-    )
-    est = agg.select(
-        "event_type",
-        F.when(
-            (e_raw <= 2.5 * HLL_M) & (zeros > 0),
-            F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros),
-        )
-        .otherwise(e_raw)
-        .alias("e"),
+    est = hll_estimate(
+        ph.groupBy("event_type", "b").agg(F.max("rho").alias("r"))
     )
     exact = e.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("distinct_users")
@@ -1295,27 +1315,7 @@ def hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit("u").alias("scope"), "b", "r")
         )
     )
-    agg = scoped.groupBy("scope").agg(
-        F.count("*").alias("nonempty"),
-        F.sum(F.expr("1.0 / double(shiftleft(cast(1 as bigint), r))"))
-        .alias("s_nonempty"),
-    )
-    zeros = F.lit(HLL_M) - F.col("nonempty")
-    e_raw = (
-        F.expr("0.7213 / (1.0 + 1.079 / 256.0)")
-        * F.lit(float(HLL_M * HLL_M))
-        / (zeros * F.lit(1.0) + F.col("s_nonempty"))
-    )
-    est = agg.select(
-        "scope",
-        F.round(
-            F.when(
-                (e_raw <= 2.5 * HLL_M) & (zeros > 0),
-                F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros),
-            ).otherwise(e_raw),
-            4,
-        ).alias("e"),
-    )
+    est = hll_estimate(scoped).select("scope", F.round("e", 4).alias("e"))
     one = est.agg(
         F.max(F.when(F.col("scope") == "a", F.col("e"))).alias(
             "est_purchase"
@@ -1420,9 +1420,8 @@ def hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact counts ride along only to surface the error; production
     keeps the cell table as an incrementally-maintained day-partitioned
     register store (the streaming dual ``hll_distinct_stream`` is the
-    same state fed incrementally).
+    same cell table fed incrementally).
     """
-    m = HLL_M
     e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
@@ -1431,7 +1430,6 @@ def hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.col("ts").cast("date").alias("day"), "user_id"
         ),
         "cast(user_id as string)",
-        m=m,
     )
     from ..operators.cache import tracked_persist
 
@@ -1443,35 +1441,14 @@ def hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def estimate(regs: DataFrame, scope_col) -> DataFrame:
-        agg = regs.groupBy(scope_col.alias("scope")).agg(
-            F.count("*").alias("nonempty"),
-            F.sum(
-                F.expr("1.0 / double(shiftleft(cast(1 as bigint), r))")
-            ).alias("s"),
-        )
-        zeros = F.lit(m) - F.col("nonempty")
-        e_raw = (
-            F.expr("0.7213 / (1.0 + 1.079 / 256.0)")
-            * F.lit(float(m * m))
-            / (zeros * F.lit(1.0) + F.col("s"))
-        )
-        return agg.select(
-            "scope",
-            F.when(
-                (e_raw <= 2.5 * m) & (zeros > 0),
-                F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-            )
-            .otherwise(e_raw)
-            .alias("e"),
-        )
-
     # MERGE path: per-type and global registers from the finest cells
-    by_type = finest.groupBy("event_type", "b").agg(F.max("r").alias("r"))
-    all_regs = finest.groupBy("b").agg(F.max("r").alias("r"))
-    ests = estimate(
-        by_type, F.concat(F.lit("type:"), F.col("event_type"))
-    ).unionByName(estimate(all_regs, F.lit("ALL")))
+    by_type = finest.groupBy(
+        F.concat(F.lit("type:"), F.col("event_type")).alias("scope"), "b"
+    ).agg(F.max("r").alias("r"))
+    all_regs = finest.groupBy(F.lit("ALL").alias("scope"), "b").agg(
+        F.max("r").alias("r")
+    )
+    ests = hll_estimate(by_type).unionByName(hll_estimate(all_regs))
 
     # both exact levels from ONE rollup aggregate (Expand, single scan)
     exacts = (

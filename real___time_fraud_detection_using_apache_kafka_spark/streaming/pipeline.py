@@ -93,18 +93,19 @@ def split_dead_letters(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
 def score_stream(txns: DataFrame, model=None, threshold: float = 0.5) -> DataFrame:
     """T3 (FD/consumer.py:114-125): stateless per-record scoring.
 
-    With an MLlib ``PipelineModel`` the transform is vectorized per
-    micro-batch and the model is broadcast once — not reloaded per record
-    like the reference.  Without a model, a deterministic amount/location
+    With an MLlib ``PipelineModel`` the stream scores through the batch
+    scorer ``ml.pipeline.score`` (featurize + transform), vectorized per
+    micro-batch with the model broadcast once — not reloaded per record
+    like the reference — then applies ``threshold`` to the fraud
+    probability.  Without a model, a deterministic amount/location
     rule stands in (same shape: adds ``prediction`` + ``probability``).
     """
     if model is not None:
-        scored = model.transform(txns)
-        from pyspark.ml.functions import vector_to_array
+        from ..ml.pipeline import score
 
-        return scored.withColumn(
-            "probability_fraud", vector_to_array("probability")[1]
-        ).withColumn("prediction", (F.col("probability_fraud") >= threshold).cast("int"))
+        return score(model, txns).withColumn(
+            "prediction", (F.col("probability_fraud") >= threshold).cast("int")
+        )
     rule_score = F.round(
         F.least(
             F.greatest(

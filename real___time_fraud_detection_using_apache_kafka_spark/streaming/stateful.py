@@ -3,15 +3,28 @@
 The reference keeps exactly two global counters in process memory
 (FD/consumer.py:17-20,127-131) — state that dies with the process and
 cannot shard.  Here per-key state lives in Spark's checkpointed state
-store via ``applyInPandasWithState``: each micro-batch updates only the
-touched keys (O(delta)), state shards by the grouping key across
-executors, and a restart resumes from the checkpoint.
+store: each micro-batch updates only the touched keys (O(delta)), state
+shards by the grouping key across executors, and a restart resumes from
+the checkpoint.
 
-Scale design: state is keyed by ``customer_id`` so it partitions across
-the cluster with the shuffle; per-key payload is a handful of scalars
-(fixed-width row), so total state is O(distinct customers), independent
-of stream length.  The idle-timeout path evicts keys that have gone
-quiet, bounding state on unbounded key domains.
+Two kinds of operator live here:
+
+- MERGEABLE folds (count, sum, max, OR) are native streaming
+  aggregations in update mode, keyed by the finest cell:
+  ``account_running_stats`` and the sketch duals ``grid_cells_stream``,
+  ``cms_sketch_stream``, ``hll_distinct_stream`` and
+  ``bloom_filter_stream``.  The engine owns the state layout; estimates
+  run the batch estimator over the streamed cells on the read side.
+- Folds that are ORDER-DEPENDENT or NOT a monoid run in
+  ``applyInPandasWithState`` with a declared state schema:
+  ``rapid_repeat_alerts`` (last-seen gap), ``ewma_stream`` and
+  ``ewma_stream_ordered`` / ``kalman_stream_ordered`` (recurrences; the
+  ordered variants buffer below the watermark), ``kmv_distinct_stream``
+  (k smallest hashes) and ``spacesaving_topk_stream`` (evicting top-k).
+
+Alongside: the watermarked stream-stream ``txn_event_interval_join``,
+the hot-reloading ``rule_alert_sink`` and the Space-Saving containment
+audit (``audit_spacesaving_summary``, ``spacesaving_containment_sink``).
 """
 
 from __future__ import annotations
@@ -24,79 +37,33 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# (count, amount_sum, fraud_count, max_amount) per customer
-ACCOUNT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_txn", T.LongType()),
-        T.StructField("amount_sum", T.DoubleType()),
-        T.StructField("n_fraud", T.LongType()),
-        T.StructField("max_amount", T.DoubleType()),
-    ]
-)
-
-ACCOUNT_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("customer_id", T.StringType()),
-        T.StructField("n_txn", T.LongType()),
-        T.StructField("amount_sum", T.DoubleType()),
-        T.StructField("n_fraud", T.LongType()),
-        T.StructField("max_amount", T.DoubleType()),
-        T.StructField("avg_amount", T.DoubleType()),
-    ]
-)
-
-
-def _update_account(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Fold this micro-batch's rows for one customer into running state.
-
-    Pure-pandas inner loop (Arrow-batched both ways); emits one updated
-    row per touched key per micro-batch — the per-key generalization of
-    the reference's two global counters.
-    """
-    if state.hasTimedOut:
-        state.remove()
-        return
-    n, amt, fraud, mx = (
-        state.get if state.exists else (0, 0.0, 0, 0.0)
-    )
-    for pdf in pdfs:
-        n += len(pdf)
-        amt += float(pdf["amount"].sum())
-        fraud += int(pdf["prediction"].sum())
-        if len(pdf):
-            mx = max(mx, float(pdf["amount"].max()))
-    state.update((n, amt, fraud, mx))
-    yield pd.DataFrame(
-        {
-            "customer_id": [key[0]],
-            "n_txn": [n],
-            "amount_sum": [round(amt, 2)],
-            "n_fraud": [fraud],
-            "max_amount": [mx],
-            "avg_amount": [round(amt / n, 2) if n else 0.0],
-        }
-    )
-
 
 def account_running_stats(scored: DataFrame) -> DataFrame:
-    """Per-customer running aggregate over the scored stream.
+    """Per-customer running aggregate over the scored stream — the
+    per-key generalization of the reference's two global counters.
 
-    ``applyInPandasWithState`` rather than a plain streaming groupBy so
-    arbitrary fold logic (max-so-far, derived ratios, custom eviction)
-    lives in one vectorized function while Spark owns sharding,
-    checkpointing, and recovery.
+    Count, sums and max are mergeable, so this is one native streaming
+    aggregation (update mode): the state store keeps four scalars per
+    customer and each micro-batch folds only the touched keys.  The
+    average is derived from the running sums, not stored.
     """
     return (
-        scored.select("customer_id", "amount", "prediction")
-        .groupBy("customer_id")
-        .applyInPandasWithState(
-            _update_account,
-            outputStructType=ACCOUNT_OUTPUT_SCHEMA,
-            stateStructType=ACCOUNT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        scored.groupBy("customer_id")
+        .agg(
+            F.count("*").alias("n_txn"),
+            F.sum("amount").alias("amount_sum"),
+            F.sum("prediction").alias("n_fraud"),
+            F.max("amount").alias("max_amount"),
+        )
+        .select(
+            "customer_id",
+            "n_txn",
+            F.round("amount_sum", 2).alias("amount_sum"),
+            "n_fraud",
+            "max_amount",
+            F.round(F.col("amount_sum") / F.col("n_txn"), 2).alias(
+                "avg_amount"
+            ),
         )
     )
 
@@ -148,81 +115,6 @@ def txn_event_interval_join(
     )
 
 
-try:  # Spark >= 4.0 typed-state API
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class AccountStatsProcessor(StatefulProcessor):
-        """Per-customer running stats on the Spark 4 ``transformWithState``
-        typed-state API — the successor to ``applyInPandasWithState``.
-
-        State is a named ValueState managed by the state store (RocksDB
-        provider: changelog-checkpointed, spills off-heap, supports key
-        domains far beyond executor memory — the 100 TB posture for
-        unbounded per-key state).  Same fold as ``_update_account``; the
-        two implementations are interchangeable and tested against each
-        other's totals.
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("acct", ACCOUNT_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            n, amt, fraud, mx = prior if prior is not None else (0, 0.0, 0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                amt += float(pdf["amount"].sum())
-                fraud += int(pdf["prediction"].sum())
-                if len(pdf):
-                    mx = max(mx, float(pdf["amount"].max()))
-            self._state.update((n, amt, fraud, mx))
-            yield pd.DataFrame(
-                {
-                    "customer_id": [key[0]],
-                    "n_txn": [n],
-                    "amount_sum": [round(amt, 2)],
-                    "n_fraud": [fraud],
-                    "max_amount": [mx],
-                    "avg_amount": [round(amt / n, 2) if n else 0.0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def account_running_stats_tws(scored: DataFrame) -> DataFrame:
-        """``transformWithStateInPandas`` flavor of account_running_stats.
-
-        Requires the RocksDB state store provider (set here on the
-        session; a no-op if already configured) and a working
-        ``google.protobuf`` (the typed-state Python driver worker speaks
-        protobuf to the JVM — absent in some minimal containers, in which
-        case use :func:`account_running_stats`).
-        """
-        scored.sparkSession.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        return (
-            scored.select("customer_id", "amount", "prediction")
-            .groupBy("customer_id")
-            .transformWithStateInPandas(
-                statefulProcessor=AccountStatsProcessor(),
-                outputStructType=ACCOUNT_OUTPUT_SCHEMA,
-                outputMode="update",
-                timeMode="none",
-            )
-        )
-
-except ImportError:  # pragma: no cover - older Spark
-    AccountStatsProcessor = None  # type: ignore[assignment]
-    account_running_stats_tws = None  # type: ignore[assignment]
-
-
 VELOCITY_STATE_SCHEMA = T.StructType([T.StructField("last_us", T.LongType())])
 
 VELOCITY_OUTPUT_SCHEMA = T.StructType(
@@ -249,9 +141,6 @@ def rapid_repeat_alerts(purchases: DataFrame, gap_sec: int = 3600) -> DataFrame:
     """
 
     def update(key, pdfs, state):  # noqa: ANN001 — applyInPandasWithState contract
-        if state.hasTimedOut:  # pragma: no cover — NoTimeout below
-            state.remove()
-            return
         rows = pd.concat(list(pdfs))
         if rows.empty:
             return
@@ -708,249 +597,78 @@ def kalman_stream_ordered(
     )
 
 
-HLL_STREAM_STATE_SCHEMA = T.StructType(
-    [T.StructField("regs", T.ArrayType(T.LongType()))]
-)
+def hll_distinct_stream(pairs: DataFrame) -> DataFrame:
+    """Per-event-type HyperLogLog registers as a native streaming
+    aggregation — the streaming dual of the batch ``hll_distinct_users``
+    query.  Registers merge by cell-wise MAX, which is order-independent,
+    so the streamed (event_type, b, r) cells equal the batch registers
+    under ANY micro-batch sharding; reading them through
+    ``plans.queries_sketch.hll_estimate`` publishes the batch estimate
+    exactly (no second definition of the estimator exists).
 
-HLL_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("nonempty", T.LongType()),
-        T.StructField("hll_estimate", T.DoubleType()),
-    ]
-)
-
-
-def hll_distinct_stream(pairs: DataFrame, m: int = 256) -> DataFrame:
-    """Per-event-type HyperLogLog registers maintained in the state
-    store — the streaming dual of the batch ``hll_distinct_users``
-    query.  Like KMV (and unlike order-sensitive recurrences), HLL
-    state is MERGEABLE and ORDER-INDEPENDENT: registers combine by
-    cell-wise max, so the stream converges to byte-identical registers
-    under ANY micro-batch sharding, and the published estimate matches
-    the batch query exactly (register integers are exact; the estimate
-    shares the batch float recipe and is compared at its published
-    4-dp rounding).
-
-    Input: the (event_type, b, rho) register-coordinate stream — build
-    it with the SAME JVM expressions the batch query uses
-    (``plans.queries_sketch.hll_bucket_rank``), exactly like
-    ``cms_sketch_stream`` takes pre-hashed (j, b) pairs.  Register
-    parity with the batch is then STRUCTURAL: the stateful op only
-    folds integer cell-wise max, so it cannot diverge even if JVM
-    Math.log and CPython math.log disagree by 1 ulp near an exact
-    floor boundary (round-7 ADVICE item — the previous version
-    recomputed rho in Python).
-
-    State per key is m longs forever; each micro-batch folds only the
-    touched keys.
+    Input: the (event_type, b, rho) register-coordinate stream, built
+    with the SAME JVM expressions the batch query uses
+    (``plans.queries_sketch.hll_bucket_rank``), so register parity is
+    structural.  Null keys hash to null coordinates and are skipped,
+    like the batch query's isNotNull filter.  State is one long per live
+    register cell.
     """
-    import math
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (regs,) = state.get if state.exists else ([0] * m,)
-        regs = list(regs)
-        for pdf in pdfs:
-            # null user_ids hash to null coordinates — skip, like the
-            # batch query's isNotNull filter (guard restored: ADVICE-
-            # class regression caught in the round-7 self-review)
-            pdf = pdf.dropna(subset=["b", "rho"])
-            for b, rho in zip(pdf["b"], pdf["rho"]):
-                b, rho = int(b), int(rho)
-                if rho > regs[b]:
-                    regs[b] = rho
-        state.update((regs,))
-        nonempty = sum(1 for r in regs if r > 0)
-        zeros = m - nonempty
-        s_nonempty = sum(1.0 / (1 << r) for r in regs if r > 0)
-        e_raw = (0.7213 / (1.0 + 1.079 / m)) * float(m * m) / (
-            zeros * 1.0 + s_nonempty
-        )
-        e = (
-            float(m) * math.log(float(m) / zeros)
-            if (e_raw <= 2.5 * m and zeros > 0)
-            else e_raw
-        )
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "nonempty": [nonempty],
-                "hll_estimate": [round(e, 4)],
-            }
-        )
-
     return (
-        pairs.select("event_type", "b", "rho")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            update,
-            outputStructType=HLL_STREAM_OUTPUT_SCHEMA,
-            stateStructType=HLL_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        pairs.filter(F.col("b").isNotNull())
+        .groupBy("event_type", "b")
+        .agg(F.max("rho").alias("r"))
     )
-
-
-BLOOM_STREAM_STATE_SCHEMA = T.StructType(
-    [T.StructField("word", T.LongType())]
-)
-
-BLOOM_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("w", T.IntegerType()),
-        T.StructField("word", T.LongType()),
-    ]
-)
 
 
 def bloom_filter_stream(words: DataFrame) -> DataFrame:
-    """Bloom-filter bitmask maintained in the state store, sharded by
-    WORD INDEX — the streaming dual of ``bloom_semijoin_prune``'s
-    packed mask build, completing the sketch-dual monoid family:
-    HLL folds cell-wise MAX, CMS cell-wise SUM, bloom cell-wise OR.
-    All three are order-independent and mergeable, so the stream lands
-    on the exact batch mask words under any micro-batch sharding (pure
-    integers — parity is equality, tested).
+    """Bloom-filter bitmask as a native streaming aggregation over mask
+    WORDS — the streaming dual of ``bloom_semijoin_prune``'s packed mask
+    build.  Words merge by cell-wise OR (``bit_or``), order-independent,
+    so the stream lands on the exact batch mask words under any
+    micro-batch sharding (pure integers — parity is equality, tested).
 
     Input: the (w, word) contribution stream — w the mask word index
-    (bit div 64), word the single-bit contribution
-    (1 << (bit % 64)) — built with the SAME JVM bit expressions the
-    batch mask build uses (``queries_sketch`` mixer + k affine maps),
-    so batch and stream hash identically; the stateful op only ORs.
-    State per key is ONE long; m/64 keys process in parallel.
+    (bit div 64), word the single-bit contribution (1 << (bit % 64)) —
+    built with the SAME JVM bit expressions the batch mask build uses
+    (``queries_sketch`` mixer + k affine maps).  State is one long per
+    live word.
     """
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (word,) = state.get if state.exists else (0,)
-        word = int(word)
-        for pdf in pdfs:
-            for wv in pdf["word"].dropna():
-                word |= int(wv)
-        state.update((word,))
-        yield pd.DataFrame({"w": [int(key[0])], "word": [word]})
-
-    return (
-        words.select("w", "word")
-        .groupBy("w")
-        .applyInPandasWithState(
-            update,
-            outputStructType=BLOOM_STREAM_OUTPUT_SCHEMA,
-            stateStructType=BLOOM_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return words.groupBy("w").agg(F.bit_or("word").alias("word"))
 
 
-CMS_STREAM_STATE_SCHEMA = T.StructType(
-    [T.StructField("counters", T.ArrayType(T.LongType()))]
-)
+def cms_sketch_stream(pairs: DataFrame) -> DataFrame:
+    """Count-min sketch counters as a native streaming aggregation, one
+    state row per (row j, bucket b) cell — the streaming dual of the
+    batch ``cms_heavy_hitters`` counter grid.  Counters merge by
+    cell-wise SUM, so the streamed (j, b, cnt) cells equal the batch
+    grid under any micro-batch sharding (pure integers — parity is
+    equality, tested).
 
-CMS_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("j", T.IntegerType()),
-        T.StructField("counters", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def cms_sketch_stream(pairs: DataFrame, w: int = 64) -> DataFrame:
-    """Count-min sketch maintained in the state store, sharded by
-    sketch ROW — the streaming dual of the batch ``cms_heavy_hitters``
-    counter grid.  Counters are mergeable by cell-wise SUM, so the
-    stream lands on the exact batch grid under any micro-batch
-    sharding (pure integers — parity is equality, tested).
-
-    Input: the (j, b) pair stream — build it with the SAME JVM bucket
-    expressions the batch query uses (``queries_sketch`` mixer +
-    per-row affine maps), so batch and stream hash identically; the
-    stateful op then just counts.  State per key is w longs; the d
-    keys process in parallel.
+    Input: the (j, b) pair stream, built with the SAME JVM bucket
+    expressions the batch query uses (``queries_sketch`` mixer + per-row
+    affine maps).  Null buckets (null keys) are skipped.
     """
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (counters,) = state.get if state.exists else ([0] * w,)
-        counters = list(counters)
-        for pdf in pdfs:
-            for b, cnt in pdf["b"].value_counts().items():
-                counters[int(b)] += int(cnt)
-        state.update((counters,))
-        yield pd.DataFrame({"j": [int(key[0])], "counters": [counters]})
-
     return (
-        pairs.select("j", "b")
-        .groupBy("j")
-        .applyInPandasWithState(
-            update,
-            outputStructType=CMS_STREAM_OUTPUT_SCHEMA,
-            stateStructType=CMS_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        pairs.filter(F.col("b").isNotNull())
+        .groupBy("j", "b")
+        .agg(F.count("*").alias("cnt"))
     )
-
-
-GRID_STREAM_STATE_SCHEMA = T.StructType(
-    [T.StructField("cnt", T.LongType())]
-)
-
-GRID_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("b", T.LongType()),
-        T.StructField("cnt", T.LongType()),
-    ]
-)
 
 
 def grid_cells_stream(cells_in: DataFrame) -> DataFrame:
-    """Streaming dual of the ``grid_quantile_sketch`` cell table —
-    completes the sketch-dual monoid family (HLL max / CMS sum /
-    bloom OR / grid SUM): the sketch IS the (event_type × bucket)
-    count table, state is ONE long per live cell, and cells merge by
-    cell-wise sum, so the streamed table equals the batch aggregate
+    """Streaming dual of the ``grid_quantile_sketch`` cell table: the
+    sketch IS the (event_type × bucket) count table, maintained as a
+    native streaming aggregation with one long per LIVE cell.  Cells
+    merge by sum, so the streamed table equals the batch aggregate
     integer-for-integer under any micro-batch sharding (parity is
-    equality, tested).  Quantile estimates then run the batch
-    estimator over the streamed cells — no second definition of the
-    interpolation exists (the ``hll_bucket_rank`` shared-definition
-    doctrine).
+    equality, tested).  Quantile estimates then run the batch estimator
+    over the streamed cells — no second definition of the interpolation
+    exists.
 
     Input: (event_type, b) rows built with the SAME JVM bucket
-    expression the batch query uses (``floor(value / W)``); keying by
-    the cell id keeps per-key state O(1) and lets the state store
-    scale with LIVE cells only — the 100 TB shape, since cells are
-    domain/width-bounded per type while rows are not.
+    expression the batch query uses (``floor(value / W)``).
     """
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (cnt,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            cnt += len(pdf)
-        state.update((cnt,))
-        yield pd.DataFrame(
-            {"event_type": [key[0]], "b": [int(key[1])], "cnt": [int(cnt)]}
-        )
-
-    return (
-        cells_in.select("event_type", "b")
-        .groupBy("event_type", "b")
-        .applyInPandasWithState(
-            update,
-            outputStructType=GRID_STREAM_OUTPUT_SCHEMA,
-            stateStructType=GRID_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return cells_in.groupBy("event_type", "b").agg(F.count("*").alias("cnt"))
 
 
 SPACESAVING_STATE_SCHEMA = T.StructType(

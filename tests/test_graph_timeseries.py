@@ -782,20 +782,67 @@ class TestKalmanStreamParity:
         assert latest == expected, {"stream": latest, "batch": expected}
 
 
+_RESTART = pytest.mark.parametrize(
+    "restart", [False, True], ids=["straight", "restart"]
+)
+
+
+def _update_rows(spark, tmp_path, op, schema, first, second, restart):
+    """Streams ``first`` then ``second`` (one atomic file each, so one
+    micro-batch each) through ``op`` in update mode and returns every
+    emitted row in emission order, so a dict built over them keeps each
+    key's latest row.  With ``restart`` the query is stopped after the
+    first micro-batch and resumed from the same checkpoint.
+
+    The sink is foreachBatch because the memory sink resumes from a
+    checkpoint only in complete mode."""
+    src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
+    write_batch = _atomic_batch_writer(tmp_path, src)
+    emitted = []
+
+    def start():
+        stream = (
+            spark.readStream.schema("v string").text(src)
+            .select(F.from_json(F.col("v"), schema).alias("e"))
+            .select("e.*")
+        )
+        return (
+            op(stream).writeStream.outputMode("update")
+            .foreachBatch(lambda df, _: emitted.extend(df.collect()))
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    write_batch(first)
+    q = start()
+    try:
+        q.processAllAvailable()
+        if restart:
+            q.stop()
+            q = start()
+        write_batch(second)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return emitted
+
+
 class TestHllStreamParity:
+    @_RESTART
     def test_hll_registers_merge_to_exact_batch_estimate(
-        self, spark, sf_dir, tmp_path
+        self, spark, sf_dir, tmp_path, restart
     ):
-        """HLL registers are a cell-wise-max mergeable state, so the
-        stream must publish the batch query's estimate EXACTLY (at its
-        own 4-dp rounding) under arbitrary micro-batch sharding —
-        here: split by event_id parity, deliberately not time order.
-        Register coordinates are built with the batch's own JVM
-        expressions (hll_bucket_rank) upstream of the stateful op, the
-        cms_sketch_stream pattern — parity is structural."""
+        """HLL registers merge by cell-wise max, so ``hll_estimate`` over
+        the streamed register cells must publish the batch query's
+        estimate EXACTLY (at its own 4-dp rounding) under arbitrary
+        micro-batch sharding — here: split by event_id parity,
+        deliberately not time order.  Register coordinates are built
+        with the batch's own JVM expressions (hll_bucket_rank) upstream
+        of the aggregation — parity is structural."""
         from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
             hll_bucket_rank,
             hll_distinct_users,
+            hll_estimate,
         )
         from real___time_fraud_detection_using_apache_kafka_spark.sources.tables import load_table
         from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
@@ -809,8 +856,8 @@ class TestHllStreamParity:
 
         # deliberately includes a null user_id row (the testdata has
         # none): it hashes to null (b, rho) coordinates, which the
-        # stateful op must skip (the batch side filters them) — guards
-        # the dropna in hll_distinct_stream
+        # stream must skip (the batch side filters them) — guards the
+        # null filter in hll_distinct_stream
         src_rows = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "user_id"
         ).unionByName(
@@ -822,54 +869,36 @@ class TestHllStreamParity:
         e = hll_bucket_rank(
             src_rows, "cast(user_id as string)"
         ).select("event_id", "event_type", "b", "rho")
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-
-        write_batch(e.filter(F.col("event_id") % 2 == 0))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"),
-                    "event_id long, event_type string, b long, rho long",
-                ).alias("e")
-            )
-            .select("e.*")
+        rows = _update_rows(
+            spark, tmp_path, hll_distinct_stream,
+            "event_id long, event_type string, b long, rho long",
+            e.filter(F.col("event_id") % 2 == 0),
+            e.filter(F.col("event_id") % 2 == 1),
+            restart,
         )
-        q = (
-            hll_distinct_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("hll_t")
-            .option("checkpointLocation", ckpt)
-            .start()
+        registers = {(r.event_type, r.b): r.r for r in rows}
+        cells = spark.createDataFrame(
+            [(t, b, reg) for (t, b), reg in registers.items()],
+            "event_type string, b long, r long",
         )
-        try:
-            q.processAllAvailable()
-            write_batch(e.filter(F.col("event_id") % 2 == 1))
-            q.processAllAvailable()
-            latest = {
-                r.event_type: r.hll_estimate
-                for r in spark.sql(
-                    "SELECT event_type, hll_estimate FROM ("
-                    " SELECT *, row_number() OVER ("
-                    "   PARTITION BY event_type ORDER BY nonempty DESC) rk"
-                    " FROM hll_t) WHERE rk = 1"
-                ).collect()
-            }
-        finally:
-            q.stop()
-        assert latest == expected
+        streamed = {
+            r.event_type: r.e
+            for r in hll_estimate(cells)
+            .select("event_type", F.round("e", 4).alias("e"))
+            .collect()
+        }
+        assert streamed == expected
 
 
 class TestCmsStreamParity:
+    @_RESTART
     def test_cms_counters_merge_to_exact_batch_grid(
-        self, spark, sf_dir, tmp_path
+        self, spark, sf_dir, tmp_path, restart
     ):
-        """CMS counters merge by cell-wise sum — the streamed grid must
-        EQUAL the batch grid (pure integers) under parity-sharded
-        micro-batches.  Bucket pairs are built with the same JVM
-        expressions on both sides."""
+        """CMS counters merge by cell-wise sum — the counter grid
+        assembled from the streamed cells must EQUAL the batch grid
+        (pure integers) under parity-sharded micro-batches.  Bucket
+        pairs are built with the same JVM expressions on both sides."""
         from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
             CMS_W, _CMS_ROWS, _MIX_P, _mixed_hash,
         )
@@ -906,59 +935,34 @@ class TestCmsStreamParity:
                 ).alias("jb"),
             ).select("event_id", "jb.j", "jb.b")
 
+        def grid(cells):
+            counters = [[0] * CMS_W for _ in _CMS_ROWS]
+            for (j, b), c in cells.items():
+                counters[j][b] = c
+            return counters
+
         e = load_table(spark, sf_dir, "events")
-        batch_grid = {
+        batch_grid = grid({
             (r.j, r.b): r.c
             for r in pairs_of(e).groupBy("j", "b").agg(
                 F.count("*").alias("c")
             ).collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(pairs_of(e.filter(F.col("event_id") % 2 == 0)))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "event_id long, j int, b long"
-                ).alias("e")
-            )
-            .select("e.*")
+        })
+        rows = _update_rows(
+            spark, tmp_path, cms_sketch_stream,
+            "event_id long, j int, b long",
+            pairs_of(e.filter(F.col("event_id") % 2 == 0)),
+            pairs_of(e.filter(F.col("event_id") % 2 == 1)),
+            restart,
         )
-        q = (
-            cms_sketch_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("cms_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(pairs_of(e.filter(F.col("event_id") % 2 == 1)))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT j, counters FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY j ORDER BY aggregate(counters, "
-                "     cast(0 as bigint), (a, x) -> a + x) DESC) rk"
-                " FROM cms_t) WHERE rk = 1"
-            ).collect()
-        finally:
-            q.stop()
-        stream_grid = {
-            (r.j, b): c
-            for r in rows
-            for b, c in enumerate(r.counters)
-            if c > 0
-        }
-        assert stream_grid == batch_grid
+        stream_grid = grid({(r.j, r.b): r.cnt for r in rows})
+        assert stream_grid == batch_grid and sum(map(sum, batch_grid)) > 0
 
 
 class TestBloomStreamParity:
+    @_RESTART
     def test_bloom_words_or_fold_to_exact_batch_mask(
-        self, spark, sf_dir, tmp_path
+        self, spark, sf_dir, tmp_path, restart
     ):
         """Bloom mask words merge by cell-wise OR — the streamed mask
         must EQUAL the batch-built packed bitmask (pure integers) under
@@ -1014,52 +1018,27 @@ class TestBloomStreamParity:
             .agg(F.expr("bit_or(word)").alias("word"))
             .collect()
         }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(words_of(e.filter(F.col("event_id") % 2 == 0)))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "event_id long, w int, word long"
-                ).alias("e")
-            )
-            .select("e.*")
+        rows = _update_rows(
+            spark, tmp_path, bloom_filter_stream,
+            "event_id long, w int, word long",
+            words_of(e.filter(F.col("event_id") % 2 == 0)),
+            words_of(e.filter(F.col("event_id") % 2 == 1)),
+            restart,
         )
-        q = (
-            bloom_filter_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("bloom_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(words_of(e.filter(F.col("event_id") % 2 == 1)))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT w, word FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY w ORDER BY bit_count(word) DESC) rk"
-                " FROM bloom_t) WHERE rk = 1"
-            ).collect()
-        finally:
-            q.stop()
         stream_mask = {r.w: r.word for r in rows}
         assert stream_mask == batch_mask and len(batch_mask) > 0
 
 
 class TestGridCellsStreamParity:
+    @_RESTART
     def test_grid_cells_merge_to_exact_batch_table(
-        self, spark, sf_dir, tmp_path
+        self, spark, sf_dir, tmp_path, restart
     ):
         """Grid-quantile cells merge by cell-wise sum — the streamed
         (event_type, bucket) count table must EQUAL the batch
         aggregate (pure integers) under parity-sharded micro-batches;
         buckets built with the same JVM floor(value / W) on both
-        sides.  Completes the sketch-dual monoid family."""
+        sides."""
         from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
             GRID_QUANTILE_W,
         )
@@ -1088,39 +1067,13 @@ class TestGridCellsStreamParity:
             .agg(F.count("*").alias("c"))
             .collect()
         }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(cells_of(e.filter(F.col("event_id") % 2 == 0)))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "event_id long, event_type string, b long"
-                ).alias("e")
-            )
-            .select("e.*")
+        rows = _update_rows(
+            spark, tmp_path, grid_cells_stream,
+            "event_id long, event_type string, b long",
+            cells_of(e.filter(F.col("event_id") % 2 == 0)),
+            cells_of(e.filter(F.col("event_id") % 2 == 1)),
+            restart,
         )
-        q = (
-            grid_cells_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("grid_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(cells_of(e.filter(F.col("event_id") % 2 == 1)))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT event_type, b, cnt FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY event_type, b ORDER BY cnt DESC) rk"
-                " FROM grid_t) WHERE rk = 1"
-            ).collect()
-        finally:
-            q.stop()
         stream_cells = {(r.event_type, r.b): r.cnt for r in rows}
         assert stream_cells == batch_cells
 

@@ -49,6 +49,58 @@ def test_score_stream_batch_streaming_parity(spark):
     assert all(r["prediction"] == 1 for r in high)
 
 
+def test_score_stream_with_fitted_model(spark, tmpdir):
+    """``score_stream(..., model=...)`` featurizes like the batch scorer
+    ``ml.pipeline.score``: a file stream scored through a fitted
+    pipeline model carries the batch probabilities, thresholded.  The
+    model is saved and reloaded, as ``stream --model-dir`` does (a
+    freshly fitted model keeps a training summary that holds the
+    session, which cannot be serialized into tasks once the session has
+    created its observation manager)."""
+    from pyspark.ml import PipelineModel
+
+    from real___time_fraud_detection_using_apache_kafka_spark.ml.pipeline import (
+        score,
+        train,
+    )
+
+    txns = batch_transactions(spark, 300)
+    fitted, _, _ = train(txns, classifier="lr")
+    fitted.write().overwrite().save(f"{tmpdir}/model")
+    model = PipelineModel.load(f"{tmpdir}/model")
+    src_dir = f"{tmpdir}/src"
+    _write_json_batch(spark, txns, src_dir)
+    stream = (
+        spark.readStream.schema("v string").text(src_dir)
+        .select(F.from_json(F.col("v"), TXN_SCHEMA).alias("txn"))
+        .select("txn.*")
+    )
+    q = (
+        score_stream(stream, model=model)
+        .select("transaction_id", "probability_fraud", "prediction")
+        .writeStream.format("memory")
+        .queryName("model_scored_t")
+        .option("checkpointLocation", f"{tmpdir}/ckpt")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        got = {
+            r["transaction_id"]: (r["probability_fraud"], r["prediction"])
+            for r in spark.sql("SELECT * FROM model_scored_t").collect()
+        }
+    finally:
+        q.stop()
+    expected = {
+        r["transaction_id"]: (
+            r["probability_fraud"], int(r["probability_fraud"] >= 0.5)
+        )
+        for r in score(model, txns).collect()
+    }
+    assert len(got) == 300 and got == expected
+    assert {p for _, p in got.values()} == {0, 1}
+
+
 def test_streaming_counts_monotonic_and_complete(spark, tmpdir):
     """T4: counters only grow as new micro-batches arrive."""
     src_dir = f"{tmpdir}/src"

@@ -9,15 +9,19 @@ Modes (first CLI arg; numeric first arg keeps the legacy default):
   is architecturally capped at 0.5 txn/s there (one record per 2 s
   sleep, single process, 1-row pandas frame per message — SURVEY.md §6).
 - ``hll``     JVM (event_type, b, rho) register coordinates
-  (``hll_bucket_rank``) -> ``hll_distinct_stream`` state fold — proves
-  the O(cells)-state HLL dual holds at rate, not just at parity.
-- ``cms``     JVM (j, b) bucket pairs -> ``cms_sketch_stream`` — same
-  proof for the count-min dual.
+  (``hll_bucket_rank``) -> ``hll_distinct_stream`` per-cell max
+  aggregation — proves the O(cells)-state HLL dual holds at rate, not
+  just at parity.
+- ``cms``     JVM (j, b) bucket pairs -> ``cms_sketch_stream`` per-cell
+  count — same proof for the count-min dual.
 - ``bloom``   JVM (w, word) bit contributions -> ``bloom_filter_stream``
-  OR-fold over a 2^20-bit mask (16k word keys).
+  per-word ``bit_or`` over a 2^20-bit mask (16k words).
 - ``kalman``  out-of-order-tolerant per-key Kalman
   (``kalman_stream_ordered``) under a 2 s watermark — the
   watermark-buffered stateful recurrence at rate.
+
+The sketch modes' final check counts the distinct live cells in the
+update-mode sink.
 
 Usage: python tools/streaming_throughput.py [mode] [rows_per_second] [seconds]
 Prints one markdown row for SCALE.md / BASELINE.md.
@@ -78,7 +82,7 @@ def _pipeline(spark, mode: str, target: float):
         return (
             hll_distinct_stream(pairs),
             "update",
-            "SELECT max(hll_estimate) FROM sink_t",
+            "SELECT count(DISTINCT event_type, b) FROM sink_t",
         )
     if mode == "cms":
         from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
@@ -119,7 +123,7 @@ def _pipeline(spark, mode: str, target: float):
         return (
             cms_sketch_stream(pairs),
             "update",
-            "SELECT count(*) FROM sink_t",
+            "SELECT count(DISTINCT j, b) FROM sink_t",
         )
     if mode == "bloom":
         from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
@@ -163,7 +167,7 @@ def _pipeline(spark, mode: str, target: float):
         return (
             bloom_filter_stream(words),
             "update",
-            "SELECT count(*) FROM sink_t",
+            "SELECT count(DISTINCT w) FROM sink_t",
         )
     if mode == "kalman":
         from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
